@@ -298,7 +298,6 @@ def build_ann_codes(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     corpus_version: int | None = None,
-    assign: str = "arrow",
     partition_by_cell: bool = False,
     expected_current: int | None = None,
     meta_cols: list[str] | None = None,
@@ -359,12 +358,10 @@ def build_ann_codes(
         raise ValueError(
             f"build_ann_codes needs an 'ivfpq' index, got {index.kind!r}"
         )
-    if assign not in ("expr", "arrow"):
-        raise ValueError(f"assign must be 'expr' or 'arrow', got {assign!r}")
     meta_cols = list(meta_cols or [])
     codes = _ivfpq_codes(
         corpus, id_col, vec_col, index.coarse, index.books,
-        index.n_sub, index.n_cells, index.d_sub, assign,
+        index.n_sub, index.n_cells, index.d_sub, "arrow",
         by_residual=index.by_residual,
         rot=getattr(index, "rot", None),
     ).withColumnRenamed("neighbor_id", "id")
@@ -393,8 +390,7 @@ def build_ann_codes(
         # read-back pass (zero extra scans): a NULL meta value would
         # make the row invisible to every pushed-down predicate —
         # exactly the silent recall leak metadata-at-rest exists to
-        # prevent (advisor round-11: presence checks alone let NULL
-        # VALUES through)
+        # prevent (presence checks alone let NULL VALUES through)
         checks=(
             {f"meta_{c}_not_null": F.col(c).isNotNull() for c in meta_cols}
             or None
@@ -499,7 +495,6 @@ def extend_ann_codes(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     corpus_version: int | None = None,
-    assign: str = "arrow",
     txn: tuple[str, int] | None = None,
 ) -> int:
     """Encode ONLY an arriving batch of vectors and MERGE its
@@ -529,15 +524,13 @@ def extend_ann_codes(
     copy-on-write term)."""
     from fortymhz_spark.operators.similarity import _ivfpq_codes
 
-    if assign not in ("expr", "arrow"):
-        raise ValueError(f"assign must be 'expr' or 'arrow', got {assign!r}")
     v, params = resolve_artifact(table_dir, "ann_codes ")
     _validate_codes_pairing(v, params, table_dir, index, "extend")
     if new_vecs.isEmpty():
         return v
     codes = _ivfpq_codes(
         new_vecs, id_col, vec_col, index.coarse, index.books,
-        index.n_sub, index.n_cells, index.d_sub, assign,
+        index.n_sub, index.n_cells, index.d_sub, "arrow",
         by_residual=index.by_residual,
         rot=getattr(index, "rot", None),
     ).withColumnRenamed("neighbor_id", "id")
@@ -829,7 +822,6 @@ def refit_ann_codes(
     deleted_fraction_threshold: float | None = None,
     corpus_version: int | None = None,
     n_coarse: int | None = None,
-    assign: str = "arrow",
 ) -> dict:
     """CLOSE the drift loop: measure this corpus's quantization error
     under the SERVING index (:func:`ann_drift_report`), and when it
@@ -958,7 +950,6 @@ def refit_ann_codes(
             if corpus_version is not None
             else codes_params.get("corpus_version")
         ),
-        assign=assign,
         partition_by_cell=(layout == ["cell"]),
         expected_current=codes_v,
         meta_cols=list(codes_params.get("meta_cols") or []),

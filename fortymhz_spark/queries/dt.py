@@ -158,15 +158,15 @@ if _HAVE_FIXTURE:
         it.  Replaces the reference's manual read_batch()+pandas loop
         (``/root/reference/code/test_reader.ipynb`` cell-2)."""
         import shutil
-        import tempfile
 
+        from fortymhz_spark.queries.artifacts import temp_dir
         from fortymhz_spark.streaming import (
             hits_file_stream,
             run_to_memory,
             streaming_channel_occupancy,
         )
 
-        d = tempfile.mkdtemp(prefix="fmhz_hits_")
+        d = temp_dir("hits")
         shutil.copy(_CSV, os.path.join(d, "hits.csv"))
         occ = streaming_channel_occupancy(hits_file_stream(spark, d))
         got = run_to_memory(occ, spark, output_mode="complete")

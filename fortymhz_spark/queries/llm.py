@@ -16,6 +16,7 @@ from fortymhz_spark.operators import dedup as dd
 from fortymhz_spark.operators import similarity as sim
 from fortymhz_spark.operators import text as tx
 from fortymhz_spark.operators.partitioning import spread_scan
+from fortymhz_spark.queries.artifacts import build_once
 from fortymhz_spark.queries.registry import Registry
 from fortymhz_spark.sources.batch import load_table
 
@@ -354,19 +355,13 @@ def q_docs_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # just a recall statistic.  Index build is cached per (process,
 # sf_dir), mirroring the ann-index and merge-table patterns.
 # ---------------------------------------------------------------------------
-_MINHASH_INDEX_CACHE: dict[str, str] = {}
-
-
-def _minhash_index_table(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _MINHASH_INDEX_CACHE:
-        return _MINHASH_INDEX_CACHE[sf_dir]
-    import tempfile
-
+@build_once("mhidx")
+def _minhash_index_table(
+    spark: SparkSession, sf_dir: str, table_dir: str
+) -> str:
     docs = load_table(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 20 != 0)
-    table_dir = tempfile.mkdtemp(prefix="fmhz_mhidx_")
     dd.build_minhash_index(old, table_dir, num_hashes=32, bands=16)
-    _MINHASH_INDEX_CACHE[sf_dir] = table_dir
     return table_dir
 
 

@@ -896,7 +896,6 @@ def start_ann_codes_sink(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     delete_col: str | None = None,
-    assign: str = "arrow",
     available_now: bool = True,
     txn_id: str | None = None,
     refit_threshold: float | None = None,
@@ -975,7 +974,7 @@ def start_ann_codes_sink(
     ``corpus_dir`` must be the raw-vector snapshot the codes describe,
     maintained upstream of (or in lockstep with) this stream.
 
-    ``tuning_dir=`` (round-12; requires the refit policy to be armed)
+    ``tuning_dir=`` (requires the refit policy to be armed)
     completes the self-healing loop on the KNOB axis: a refit
     invalidates persisted serving knobs by contract
     (``load_ann_tuning``'s index-version pairing), so a maintenance
@@ -1083,9 +1082,9 @@ def start_ann_codes_sink(
         have_dels = dels is not None and not dels.isEmpty()
         if not have_adds and not have_dels:
             mark_stream_txn(codes_dir, (app, batch_id))
-            # Liveness (round-12 advisor item): when the tombstone arm
-            # is armed, STANDING deleted mass must be re-checked even
-            # on a batch that applies nothing — after a coverage-guard
+            # Liveness: when the tombstone arm is armed, STANDING
+            # deleted mass must be re-checked even on a batch that
+            # applies nothing — after a coverage-guard
             # deferral the trigger condition lives in the TABLE, not
             # the batch, and a stream of empty/heartbeat triggers must
             # still retry once the corpus catches up.  The check is
@@ -1095,8 +1094,7 @@ def start_ann_codes_sink(
                 return
         if have_adds:
             extend_ann_codes(
-                adds, codes_dir, live["index"], id_col=id_col,
-                vec_col=vec_col, assign=assign,
+                adds, codes_dir, live["index"], id_col=id_col, vec_col=vec_col,
                 txn=None if have_dels else (app, batch_id),
             )
         if have_dels:
@@ -1119,10 +1117,10 @@ def start_ann_codes_sink(
             trigger = batch_err is not None and batch_err > refit_threshold
         # The tombstone arm reads STANDING table state, so it is
         # evaluated on EVERY armed batch, not only ones carrying
-        # deletes (round-12 advisor item: gating it on have_dels left
-        # a deferred refit stalled forever once the stream turned to
-        # low-drift adds — the mass was already in the table; nothing
-        # re-looked).  Zero-scan manifest arithmetic per trigger.
+        # deletes (gating it on have_dels would leave a deferred refit
+        # stalled forever once the stream turned to low-drift adds —
+        # the mass is already in the table; nothing would re-look).
+        # Zero-scan manifest arithmetic per trigger.
         if not trigger and refit_deleted_fraction is not None:
             trigger = (
                 codes_deleted_fraction(codes_dir) > refit_deleted_fraction
@@ -1135,8 +1133,8 @@ def start_ann_codes_sink(
         from fortymhz_spark.sources.snapshots import read_snapshot
 
         corpus = read_snapshot(spark, corpus_dir)
-        # COVERAGE GUARD (round-11 advisor item): the refit rebuilds
-        # codes from ``corpus_dir`` and re-applies only THIS batch —
+        # COVERAGE GUARD: the refit rebuilds codes from
+        # ``corpus_dir`` and re-applies only THIS batch —
         # correct only when the corpus lags the stream by at most this
         # trigger.  If it lags further, ids extended in EARLIER batches
         # would silently vanish from the rebuilt table and earlier
@@ -1191,8 +1189,8 @@ def start_ann_codes_sink(
         if n_resurrected:
             import warnings
 
-            # AUTO-HEAL (round-12, the r11 verdict's item #9): corpus
-            # rows the stream's codes table does NOT serve — earlier
+            # AUTO-HEAL: corpus rows the stream's codes table does
+            # NOT serve — earlier
             # batches deleted them (the corpus is stale) or they have
             # not been ingested yet (the corpus is ahead).  Unlike the
             # n_missing case this IS locally healable: restrict the
@@ -1228,7 +1226,6 @@ def start_ann_codes_sink(
             vec_col=vec_col,
             drift_threshold=refit_threshold,
             deleted_fraction_threshold=refit_deleted_fraction,
-            assign=assign,
         )
         if not res["refit"]:
             return
@@ -1240,14 +1237,13 @@ def start_ann_codes_sink(
         # stream by a trigger (idempotent keyed merges)
         if have_adds:
             extend_ann_codes(
-                adds, codes_dir, live["index"], id_col=id_col,
-                vec_col=vec_col, assign=assign,
+                adds, codes_dir, live["index"], id_col=id_col, vec_col=vec_col,
             )
         if have_dels:
             delete_ann_codes(dels, codes_dir, live["index"], id_col=id_col)
         if tuning_dir is not None:
-            # KNOB re-tune (round-12): a refit INVALIDATES persisted
-            # tuning by contract (load_ann_tuning index-version
+            # KNOB re-tune: a refit INVALIDATES persisted tuning by
+            # contract (load_ann_tuning index-version
             # pairing), so a maintenance loop that heals only the
             # geometry silently drops serving back to formula
             # defaults — the measured 0.822-tuned vs 0.616-default gap
@@ -1269,12 +1265,11 @@ def start_ann_codes_sink(
             # the tune population is exactly what is SERVED after the
             # re-apply: the refit population UPSERTED with this
             # batch's adds — corpus rows the batch updated are
-            # anti-joined out so the add's vector wins uniquely
-            # (round-13 advisor item: a duplicated id's stale vector
-            # would bias the brute-force ground truth with rows
-            # serving can never return).  dels are already excluded
-            # from refit_corpus, and adds were filtered to the
-            # non-delete-flagged winners upfront.
+            # anti-joined out so the add's vector wins uniquely (a
+            # duplicated id's stale vector would bias the brute-force
+            # ground truth with rows serving can never return).  dels
+            # are already excluded from refit_corpus, and adds were
+            # filtered to the non-delete-flagged winners upfront.
             tune_pop = _retune_population(
                 refit_corpus, adds, id_col, vec_col, have_adds
             )
@@ -1295,10 +1290,10 @@ def start_ann_codes_sink(
         df, codes_dir, checkpoint_dir, body,
         available_now=available_now, txn_id=txn_id,
         # The tombstone arm's trigger lives in STANDING table state,
-        # so body must run even for zero-row micro-batches (round-13
-        # advisor item: the shared wrapper's empty-batch early return
-        # otherwise made the 'on EVERY batch' liveness contract hold
-        # only for batches whose rows all filtered out).  body is
+        # so body must run even for zero-row micro-batches (the shared
+        # wrapper's empty-batch early return otherwise made the 'on
+        # EVERY batch' liveness contract hold only for batches whose
+        # rows all filtered out).  body is
         # no-op-safe on empty input: it lands the txn mark and falls
         # through to the zero-scan manifest check.
         run_on_empty=refit_deleted_fraction is not None,

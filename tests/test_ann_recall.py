@@ -997,15 +997,10 @@ def test_ann_codes_delete_preserves_cell_partitioning(spark, truth, tmp_path):
     )
 
 
-def test_extend_ann_codes_validates_assign_and_inherits_pin(
-    spark, truth, tmp_path
-):
-    """extend_ann_codes must reject a typo'd assign= (silently falling
-    through to the expr path hides an arrow-path regression) and must
-    INHERIT the table's corpus pin when corpus_version=None — an
-    extend that forgot to re-pass the version must not strip a pinned
-    table of its staleness guard."""
-    import pytest as _pytest
+def test_extend_ann_codes_inherits_pin(spark, truth, tmp_path):
+    """extend_ann_codes must INHERIT the table's corpus pin when
+    corpus_version=None — an extend that forgot to re-pass the version
+    must not strip a pinned table of its staleness guard."""
     from pyspark.sql import functions as F
 
     from fortymhz_spark.operators.ann_index import (
@@ -1025,8 +1020,6 @@ def test_extend_ann_codes_validates_assign_and_inherits_pin(
         corpus_version=7,
     )
     batch = emb.filter(F.col("vec_id") % 5 == 0)
-    with _pytest.raises(ValueError, match="assign must be"):
-        extend_ann_codes(batch, codes_dir, idx, assign="arrw")
     # None inherits the pin: the table still serves under pin 7
     extend_ann_codes(batch, codes_dir, idx)
     assert load_ann_codes(
