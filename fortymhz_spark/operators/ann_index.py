@@ -66,7 +66,6 @@ from pyspark.sql import functions as F
 from fortymhz_spark.operators.similarity import (
     _auto_cells,
     _centroids,
-    _matrix_lit,
     _pq_train,
 )
 from fortymhz_spark.sources.snapshots import (
@@ -361,7 +360,7 @@ def build_ann_codes(
     meta_cols = list(meta_cols or [])
     codes = _ivfpq_codes(
         corpus, id_col, vec_col, index.coarse, index.books,
-        index.n_sub, index.n_cells, index.d_sub, "arrow",
+        index.n_sub, index.n_cells, index.d_sub,
         by_residual=index.by_residual,
         rot=getattr(index, "rot", None),
     ).withColumnRenamed("neighbor_id", "id")
@@ -530,7 +529,7 @@ def extend_ann_codes(
         return v
     codes = _ivfpq_codes(
         new_vecs, id_col, vec_col, index.coarse, index.books,
-        index.n_sub, index.n_cells, index.d_sub, "arrow",
+        index.n_sub, index.n_cells, index.d_sub,
         by_residual=index.by_residual,
         rot=getattr(index, "rot", None),
     ).withColumnRenamed("neighbor_id", "id")
@@ -671,37 +670,29 @@ def ann_drift_report(
     scale."""
     from fortymhz_spark.operators.similarity import (
         _nearest_cells,
-        _normalized,
         _pq_dtab_col,
-        _residual_anchor,
-        _residual_col,
+        _pq_space,
     )
 
     if index.kind != "ivfpq":
         raise ValueError(
             f"ann_drift_report needs an 'ivfpq' index, got {index.kind!r}"
         )
-    vn = F.col("_vn")
+    rot = getattr(index, "rot", None)
     if index.by_residual:
         # residual codebooks quantize (vn - anchor[cell]) — measure the
-        # error in that space, binding the residual in its own
-        # projection (one coarse assignment + one subtraction per row,
-        # still map-only)
-        anchors = F.lit(_residual_anchor(index.coarse))
-        normed = corpus.select(
-            _normalized(vec_col).alias("_vn"),
-            _nearest_cells(vec_col, index.coarse, 1)[0].alias("_cell"),
-        ).select(_residual_col(vn, anchors, F.col("_cell")).alias("_vn"))
-    else:
-        normed = corpus.select(_normalized(vec_col).alias("_vn"))
-    if getattr(index, "rot", None) is not None:
-        # OPQ: the codebooks live in rotated space — measure the
-        # error there (same once-per-row rebind the encode uses)
-        from fortymhz_spark.operators.similarity import _rotate_col
-
-        normed = normed.select(
-            _rotate_col(vn, _matrix_lit(index.rot), index.dim).alias("_vn")
+        # error in that space; the coarse cell comes from the pure
+        # expression assignment so the report stays one map-only scan
+        # with no Python boundary
+        cells = corpus.select(
+            vec_col, _nearest_cells(vec_col, index.coarse, 1)[0].alias("cell")
         )
+        normed = _pq_space(
+            cells, ["cell"], vec_col, coarse=index.coarse, rot=rot
+        )
+    else:
+        normed = _pq_space(corpus, [], vec_col, rot=rot)
+    vn = F.col("_vn")
     per_row = normed.select(
         sum(
             (

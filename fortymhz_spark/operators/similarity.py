@@ -1,18 +1,30 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two paths:
+Every kNN operator here is one pipeline of three choices, returning
+``(query_id, neighbor_id, cosine)`` rows, k per query, self-matches
+excluded:
 
-- ``brute_force_knn`` — exact top-k by cosine: a broadcast join of the
-  (small) query set against the corpus, JVM-side fold arithmetic, then
-  per-query TakeOrdered.  This is the baseline and the re-rank step.
-- ``lsh_knn`` — sign-random-projection LSH: H fixed hyperplanes give an
-  H-bit bucket code; candidates = corpus rows whose code collides with
-  the query in any band; exact cosine re-ranks candidates.  Shuffle key
-  is the (band, code-chunk) — never the full corpus cross product.
+- **candidate generator** — exact (every corpus row:
+  ``brute_force_knn`` as a broadcast JVM fold, ``brute_force_knn_arrow``
+  as an Arrow batch matmul), LSH (``lsh_knn``: sign-random-projection
+  band codes; candidates collide with the query in some band), or IVF
+  (``ivf_knn``/``ivfpq_knn``: corpus rows sit in their nearest coarse
+  cell, each query probes its ``nprobe`` nearest cells, assigned by
+  :func:`_assign_cells_arrow`);
+- **codec** — what the candidate scan reads: flat vectors (exact
+  cosine straight away), PQ codes (``pq_knn``/``ivfpq_knn``, ranked by
+  asymmetric distance), residual PQ (codes of ``vn - anchor[cell]``)
+  or OPQ (codes of the rotated vector); the three PQ codecs share one
+  projection into PQ space (:func:`_pq_space`);
+- **exact re-rank** — the final cosine top-k (:func:`_top_k`); the PQ
+  codecs first cut a ``k * rerank`` ADC shortlist and fetch only its
+  raw vectors (:func:`_fetch_and_rerank`).
 
-The hyperplane matrix is generated once, driver-side, from a fixed seed
-(deterministic; a few KB) and embedded as a literal array — at any
-corpus scale it broadcasts with the task binary.
+Ties break to the lowest neighbor id everywhere.  Centroids,
+hyperplanes, codebooks and rotations are small matrices computed
+before the query runs (deterministic from the corpus or a fixed seed)
+and embedded as literals, so at any corpus scale they ship with the
+task binary.
 """
 
 from __future__ import annotations
@@ -29,37 +41,49 @@ from fortymhz_spark.functions.vectors import cosine_similarity
 def _matrix_lit(mat) -> "F.Column":
     """Nested ``array<array<double>>`` literal via ONE ``F.expr`` parse.
 
-    Round-13 optimization (guide §1.2 step 2 / §7.3): ``F.lit(list)``
-    recurses into ``array(*[lit(x) ...])`` — one py4j round trip per
-    element, measured 0.43 s for an 8×64 centroid matrix and ~3.5 s
-    for a 64×64 rotation, rebuilt on EVERY Lloyd round / serve call.
-    Formatting the same doubles as a SQL literal and parsing once is
-    ~0.03 s and value-identical: ``repr(float)`` emits the shortest
-    string that round-trips IEEE-754, and Spark's double-literal
-    parse (Java ``Double.parseDouble``) lands on the same bits — the
-    byte-identity was asserted element-for-element against the
-    ``F.lit`` form before the swap.  Constant folding collapses both
-    forms to the SAME ``Literal(ArrayData)`` node, so plans and
-    codegen are unchanged.  Non-finite values (``repr`` forms SQL
-    cannot parse) fall back to the original construction."""
-    s = _matrix_sql(mat)
-    if s is not None:
-        return F.expr(s)
-    return F.lit([[float(x) for x in row] for row in mat])
+    ``F.lit(list)`` recurses into ``array(*[lit(x) ...])`` — one py4j
+    round trip per element, measured 0.43 s for an 8×64 centroid
+    matrix and ~3.5 s for a 64×64 rotation, rebuilt on every Lloyd
+    round and serve call.  Parsing the same doubles as one SQL literal
+    is ~0.03 s and value-identical (see :func:`_matrix_sql`); constant
+    folding collapses both forms to the same ``Literal(ArrayData)``
+    node, so plans and codegen are unchanged."""
+    return F.expr(_matrix_sql(mat))
 
 
-def _matrix_sql(mat) -> str | None:
-    """The SQL text of :func:`_matrix_lit`'s literal, or None when a
-    non-finite value forces the ``F.lit`` fallback — shared by the
+def _double_sql(x: float) -> str:
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+    return repr(x) + "D"
+
+
+def _matrix_sql(mat) -> str:
+    """The SQL text of :func:`_matrix_lit`'s literal, shared by the
     single-parse argmin templates below, which inline the matrix into
-    one ``F.expr`` string."""
-    vals = [[float(x) for x in row] for row in mat]
-    if not all(math.isfinite(x) for row in vals for x in row):
-        return None
+    one ``F.expr`` string.  ``repr(float)`` is the shortest string that
+    round-trips IEEE-754 and Spark's double-literal parse lands on the
+    same bits; non-finite values, which have no literal syntax, are
+    string casts that constant folding evaluates to the same bits."""
     return "array(" + ", ".join(
-        "array(" + ", ".join(repr(x) + "D" for x in row) + ")"
-        for row in vals
+        "array(" + ", ".join(_double_sql(float(x)) for x in row) + ")"
+        for row in mat
     ) + ")"
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` highest-``cosine`` rows per ``query_id`` of a
+    ``(query_id, neighbor_id, cosine)`` frame, ties to the lowest
+    neighbor id — the final cut every kNN operator ends with."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
+    )
 
 
 def brute_force_knn(
@@ -87,14 +111,7 @@ def brute_force_knn(
         .withColumn("cosine", cosine_similarity("qv", "cv"))
         .select("query_id", "neighbor_id", "cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _top_k(scored, k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -188,10 +205,11 @@ def lsh_knn(
         # same pathology as operators/dedup.py.)  Vectors do not ride
         # along: only (id, band, bcode) enters the explode and the
         # bucket shuffle; candidates re-acquire vectors by id-join below.
-        # Single-parse SQL template (round-13): the per-plane ±1 literal
-        # arrays alone cost one py4j round-trip per element (~2,000 per
-        # side at dim 64); one expr parse builds the identical tree —
-        # D-suffixed literals keep every constant DOUBLE like F.lit did.
+        # Single-parse SQL template: the per-plane ±1 literal arrays
+        # built through the Column API cost one py4j round-trip per
+        # element (~2,000 per side at dim 64); one expr parse builds the
+        # identical tree, and D-suffixed literals keep every constant
+        # DOUBLE.
         band_structs = []
         for b in range(bands):
             bits = []
@@ -239,12 +257,7 @@ def lsh_knn(
         .withColumn("cosine", cosine_similarity("query_v", "neighbor_v"))
         .select("query_id", "neighbor_id", "cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _top_k(scored, k)
 
 
 def cosine_near_dup_pairs(
@@ -316,20 +329,68 @@ KMEANS_AUTO_FIT_ROWS_PER_CENTROID: int = 32
 KMEANS_AUTO_ARROW_MIN_K: int = 33
 
 
-def _check_index_dim(corpus: DataFrame, vec_col: str, want: int) -> None:
-    """Serving-time guard for a persisted index: the corpus's vector
-    width must equal the width the index trained on, or the distance
-    arithmetic downstream is silently wrong (short zip_with folds,
-    numpy shape errors deep in the arrow kernel).  One first() over
-    the size projection — the same bounded probe ``_pq_train`` pays."""
+_KIND_ERRORS = {
+    "ivf_knn": "ivf_knn serves the coarse half of an 'ivfpq' index, got kind={!r}",
+    "pq_knn": "pq_knn serves the codebook half of an 'ivfpq' index, got kind={!r}",
+    "ivfpq_knn": "ivfpq_knn needs an 'ivfpq' index, got {!r}",
+}
+
+
+def _check_index(
+    index, corpus: DataFrame, vec_col: str, caller: str,
+    *, by_residual: bool | None = None, rotation: str | None = None,
+) -> bool:
+    """Serving-time geometry check of a persisted index for ``caller``
+    (``ivf_knn``/``pq_knn``/``ivfpq_knn``); returns the index's
+    ``by_residual`` mode.
+
+    The encode space (residual or not) and the rotation are index
+    geometry, not query-time knobs: codebooks were trained in one
+    space and must be ADC'd in it, so an explicit argument that
+    contradicts the recorded mode fails loudly instead of silently
+    serving the other space (``rotation="auto"`` accepts whatever the
+    build decided — the recorded mode is the auto result).  ``pq_knn``
+    cannot serve residual codebooks at all: they quantize
+    ``vn - anchor[cell]`` and mean nothing without the coarse cell.
+    Last, the corpus's vector width must equal the width the index
+    trained on, or the distance arithmetic downstream is silently
+    wrong (short zip_with folds, numpy shape errors deep in the arrow
+    kernel) — one first() over the size projection, checked after the
+    pure-Python checks so those fail without a Spark job."""
+    if index.kind != "ivfpq":
+        raise ValueError(_KIND_ERRORS[caller].format(index.kind))
+    idx_mode = bool(getattr(index, "by_residual", False))
+    if caller == "pq_knn" and idx_mode:
+        raise ValueError(
+            "pq_knn cannot serve a by_residual index: residual "
+            "codebooks quantize (vn - anchor[cell]) and are "
+            "meaningless without the coarse cell context — use "
+            "ivfpq_knn(index=...)"
+        )
+    if by_residual is not None and bool(by_residual) != idx_mode:
+        raise ValueError(
+            f"by_residual={by_residual!r} conflicts with the "
+            f"index's recorded mode (by_residual={idx_mode}) — "
+            "the encode space is index geometry; drop the "
+            "argument or load the matching index"
+        )
+    idx_rotation = getattr(index, "rotation", None)
+    if rotation not in (None, "auto") and rotation != idx_rotation:
+        raise ValueError(
+            f"rotation={rotation!r} conflicts with the index's "
+            f"recorded mode (rotation={idx_rotation!r}) — the "
+            "rotation is index geometry; drop the argument or "
+            "load the matching index"
+        )
     first = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
     got = None if first is None else first["d"]
-    if got != want:
+    if got != index.dim:
         raise ValueError(
-            f"persisted index trained at dim={want} but the serving "
+            f"persisted index trained at dim={index.dim} but the serving "
             f"corpus's {vec_col!r} is dim={got} — rebuild the index or "
             "serve the matching corpus"
         )
+    return idx_mode
 
 
 def _auto_cells(
@@ -373,18 +434,17 @@ def _auto_rerank(
     rerank=16).  √N keeps the shortlist a vanishing FRACTION of the
     corpus while still growing absolutely.
 
-    The cap was 256 through round 10; the round-11 decade soak showed
-    it is the BINDING recall constraint at deployment scale on
-    near-uniform embeddings: at 200 k vectors (n_coarse=1600) even
+    The cap is 1024 because a lower one is the BINDING recall
+    constraint at deployment scale on near-uniform embeddings (the
+    decade soak, SCALE.md): at 200 k vectors (n_coarse=1600) even
     probing every cell topped out at recall 0.62 under rerank=256,
     while rerank=1024 restored 0.855 at the coverage-rule nprobe —
     and the SLO tuner's measured minimal nprobe (329 for recall 0.8
     at rerank=1024) matched :func:`_auto_nprobe`'s closed form (328)
-    exactly, validating the nprobe rule once rerank is right
-    (SCALE.md round-11).  The 1024 cap bounds the exact-rerank fetch
-    at k×1024 rows per query and only binds above N ≈ 10⁶; below
-    N = 65 k (√N < 256) nothing changes.  Explicit values pass
-    through untouched."""
+    exactly, validating the nprobe rule once rerank is right.  The
+    1024 cap bounds the exact-rerank fetch at k×1024 rows per query
+    and only binds above N ≈ 10⁶; below N = 65 k (√N < 256) nothing
+    changes.  Explicit values pass through untouched."""
     if rerank is not None:
         return rerank
     n = corpus.count() if n is None else n
@@ -415,55 +475,23 @@ def _centroids(corpus: DataFrame, id_col: str, vec_col: str, k: int) -> list:
 
 def _nearest_cells(vec_col: str, centroids: list, nprobe: int):
     """array<int> of the ``nprobe`` centroid indices with the highest
-    dot product against ``vec_col``.  Built as one
-    transform-over-sequence lambda with the centroid matrix as a
-    single nested literal (the ``_pq_code_col`` construction — the
-    per-centroid literal-array form costs O(n_cells x dim) py4j
-    expression-building calls, which dominated the ANN queries' wall
-    time before any Spark job ran).  Ordering is IDENTICAL to the
-    original per-centroid form: struct (dot, cell) sorted ascending
-    then reversed, so equal dots tie-break toward the HIGHER cell.
-
-    Round-13: when ``vec_col`` is a plain name and the matrix is
-    finite (every in-repo call site), the WHOLE expression is one
-    ``F.expr`` parse — the lambda-by-lambda Column construction cost
-    ~0.5 s per call (one py4j round trip per node), rebuilt per serve
-    and per Lloyd round.  The template text is the same tree the
-    Column form builds (same fold order, casts, struct field names,
-    tie-break), so plans and results are unchanged."""
-    mat = _matrix_sql(centroids)
-    if isinstance(vec_col, str) and mat is not None:
-        k = len(centroids)
-        return F.expr(
-            f"element_at(transform(array(`{vec_col}`), v0 -> "
-            f"transform(slice(reverse(array_sort(transform(sequence(0, {k - 1}), "
-            f"i -> named_struct('dot', aggregate(zip_with(v0, "
-            f"element_at({mat}, cast(i + 1 as int)), "
-            "(a, b) -> cast(a as double) * b), 0.0D, (acc, x) -> acc + x), "
-            f"'cell', i)))), 1, {int(nprobe)}), s -> s.cell)), 1)"
-        )
-    cents_lit = _matrix_lit(centroids)
-
-    def over(v):
-        scored = F.transform(
-            F.sequence(F.lit(0), F.lit(len(centroids) - 1)),
-            lambda i: F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        v,
-                        F.element_at(cents_lit, (i + F.lit(1)).cast("int")),
-                        lambda a, b: a.cast("double") * b,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("dot"),
-                i.alias("cell"),
-            ),
-        )
-        ranked = F.reverse(F.array_sort(scored))
-        return F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cell"])
-
-    return F.element_at(F.transform(F.array(F.col(vec_col)), over), 1)
+    dot product against column ``vec_col`` — the pure-expression form
+    of :func:`_assign_cells_arrow` (whole-stage codegen, no Python
+    boundary) and the reference its tie-break is tested against.  One
+    ``F.expr`` parse of a transform-over-sequence lambda with the
+    centroid matrix as a single nested literal, so plan size and py4j
+    construction cost stay constant in the number of centroids.  The
+    struct (dot, cell) list is sorted ascending then reversed, so equal
+    dots tie-break toward the HIGHER cell."""
+    k = len(centroids)
+    return F.expr(
+        f"element_at(transform(array(`{vec_col}`), v0 -> "
+        f"transform(slice(reverse(array_sort(transform(sequence(0, {k - 1}), "
+        f"i -> named_struct('dot', aggregate(zip_with(v0, "
+        f"element_at({_matrix_sql(centroids)}, cast(i + 1 as int)), "
+        "(a, b) -> cast(a as double) * b), 0.0D, (acc, x) -> acc + x), "
+        f"'cell', i)))), 1, {int(nprobe)}), s -> s.cell)), 1)"
+    )
 
 
 def ivf_knn(
@@ -475,7 +503,6 @@ def ivf_knn(
     k: int = 10,
     n_cells: int | None = 16,
     nprobe: int = 4,
-    assign: str = "arrow",
     index=None,
 ) -> DataFrame:
     """Approximate top-k via an inverted-file index: corpus rows are
@@ -483,20 +510,15 @@ def ivf_knn(
     lists); each query probes its ``nprobe`` nearest cells and exact
     cosine re-ranks only those candidates.
 
-    ``assign``: ``"arrow"`` (default — the deployed form) routes
-    assignment through :func:`_assign_cells_arrow`'s batch matmul (one
-    ``X@C.T`` per Arrow batch, centroids in the task closure) — the
-    only form that survives auto-sized indexes (``⌈√N⌉`` cells at a
-    billion vectors is ~31k, far past the expression form's plan-size
-    ceiling; the 10× soak measured the composed IVFPQ at expr 81.65 s
-    vs arrow 9.55 s once ``n_coarse`` grows with the corpus).
-    ``"expr"`` keeps cell assignment a pure column expression —
-    whole-stage codegen, bit-reproducible on any partitioning, but
-    per-row cost and plan size grow with ``n_cells``; it stays
-    available for small fixed cell counts where expression-level
-    any-partitioning reproducibility matters more than scaling.  The
-    two are tie-compatible by construction; BLAS sum order can flip a
-    boundary cell in the last ulp (the ``kmeans_assign`` caveat).
+    Cell assignment runs through :func:`_assign_cells_arrow`'s batch
+    matmul (one ``X@C.T`` per Arrow batch, centroids in the task
+    closure), the form that survives auto-sized indexes: ``⌈√N⌉`` cells
+    at a billion vectors is ~31k, far past the plan-size ceiling of the
+    expression form (:func:`_nearest_cells`), which the 10× soak
+    measured at 81.65 s vs 9.55 s for the composed IVFPQ once
+    ``n_coarse`` grows with the corpus.  The two forms break ties
+    identically, but BLAS sum order can flip a boundary cell in the
+    last ulp (the ``kmeans_assign`` caveat).
 
     Scale shape: the corpus shuffles once on cell id (≈ corpus/n_cells
     rows per cell), queries explode ×nprobe, and the join is
@@ -506,67 +528,36 @@ def ivf_knn(
 
     ``n_cells=None`` auto-sizes to ``⌈√N⌉`` (the FAISS IVF guideline —
     balances cell-scan cost √N against candidate volume N/√N) via one
-    corpus count, capped at 4096: past ~a few thousand cells the
-    expression-argmin assignment hits the Catalyst plan-size ceiling
-    and the arrow-assign k-means twin (``kmeans_assign``) is the right
-    tool for cell assignment instead.
+    corpus count, capped at 4096.
 
     ``index=`` (a persisted ``AnnIndex``, operators/ann_index.py)
     serves from its COARSE half, skipping the centroid collect — one
     composed ivfpq artifact serves ivf/pq/ivfpq; ``n_cells`` is
     ignored when given.
     """
-    if assign not in ("expr", "arrow"):
-        raise ValueError(f"assign must be 'expr' or 'arrow', got {assign!r}")
     if index is not None:
-        if index.kind != "ivfpq":
-            raise ValueError(
-                f"ivf_knn serves the coarse half of an 'ivfpq' index, "
-                f"got kind={index.kind!r}"
-            )
-        _check_index_dim(corpus, vec_col, index.dim)
-        cents, n_cells = index.coarse, index.n_coarse
+        _check_index(index, corpus, vec_col, "ivf_knn")
+        cents = index.coarse
     else:
-        n_cells = _auto_cells(corpus, n_cells)
-        cents = _centroids(corpus, id_col, vec_col, n_cells)
-    if assign == "arrow":
-        c_assign = _assign_cells_arrow(
-            corpus, id_col, vec_col, cents, 1, keep_vec=True
+        cents = _centroids(corpus, id_col, vec_col, _auto_cells(corpus, n_cells))
+
+    def cells(df: DataFrame, role: str, probes: int) -> DataFrame:
+        return _assign_cells_arrow(
+            df, id_col, vec_col, cents, probes, keep_vec=True
         ).select(
-            F.col("id").alias("neighbor_id"),
-            F.col("v").alias("neighbor_v"),
+            F.col("id").alias(f"{role}_id"),
+            F.col("v").alias(f"{role}_v"),
             "cell",
         )
-        q_assign = _assign_cells_arrow(
-            queries, id_col, vec_col, cents, nprobe, keep_vec=True
-        ).select(
-            F.col("id").alias("query_id"),
-            F.col("v").alias("query_v"),
-            "cell",
-        )
-    else:
-        c_assign = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("neighbor_v"),
-            _nearest_cells(vec_col, cents, 1)[0].alias("cell"),
-        )
-        q_assign = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("query_v"),
-            F.explode(_nearest_cells(vec_col, cents, nprobe)).alias("cell"),
-        )
+
     scored = (
-        c_assign.join(q_assign, ["cell"])
+        cells(corpus, "neighbor", 1)
+        .join(cells(queries, "query", nprobe), ["cell"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cosine", cosine_similarity("query_v", "neighbor_v"))
         .select("query_id", "neighbor_id", "cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _top_k(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -668,7 +659,7 @@ def _sample_eig(sample):
 #: geometry so the call is auditable from the artifact alone.
 ANISOTROPY_OPQ_THRESHOLD = 2.0
 
-#: Filtered-ANN broad-filter guard (round-13): when a
+#: Filtered-ANN broad-filter guard: when a
 #: ``corpus_filter`` that cannot push into the codes scan matches
 #: more than this fraction of the served table, ``ivfpq_knn`` warns
 #: that the semi-join fallback is being used where the
@@ -787,6 +778,37 @@ def _rotate_col(vn, rot_lit, dim: int):
             lambda acc, x: acc + x,
         ),
     )
+
+
+def _pq_space(
+    df: DataFrame, keep: list, vec_col: str, *,
+    coarse: list | None = None, rot: list | None = None,
+) -> DataFrame:
+    """``df``'s ``keep`` columns plus ``_vn``, the vector in column
+    ``vec_col`` projected into the space the PQ codebooks quantize:
+    L2-normalized (squared-L2 order == cosine order), then minus its
+    cell's anchor when ``coarse`` is given (residual PQ —
+    :func:`_residual_anchor`, the frame must already carry ``cell``),
+    then rotated by ``rot`` (OPQ).  Every PQ encode, distance table and
+    drift probe goes through here, so train, encode and serve agree on
+    the space by construction.
+
+    Each step re-binds ``_vn`` in its own projection: the ``n_sub``
+    code/dtab columns downstream all reference the bound column, and
+    CollapseProject declines to inline a multiply-referenced non-cheap
+    alias, so the O(dim) norm, the subtraction and the O(dim²)
+    rotation each run once per row instead of once per column.  The
+    coarse ASSIGNMENT stays in the original space: argmax dot is
+    invariant to scaling the assigned vector, and an orthogonal
+    rotation preserves every dot product."""
+    out = df.select(*keep, _normalized(vec_col).alias("_vn"))
+    vn = F.col("_vn")
+    if coarse is not None:
+        anchors = _matrix_lit(_residual_anchor(coarse))
+        out = out.select(*keep, _residual_col(vn, anchors, F.col("cell")).alias("_vn"))
+    if rot is not None:
+        out = out.select(*keep, _rotate_col(vn, _matrix_lit(rot), len(rot)).alias("_vn"))
+    return out
 
 
 def _pq_code_col(vn, books, s: int, d_sub: int, n_cells: int):
@@ -931,7 +953,7 @@ def pq_knn(
     same corpus always yields the same codes.
 
     ``rerank=None`` (default) auto-sizes the re-rank width to
-    ``max(16, min(256, ⌈√N⌉))`` via :func:`_auto_rerank` — a FIXED
+    ``max(16, min(1024, ⌈√N⌉))`` via :func:`_auto_rerank` — a FIXED
     width is the measured recall leak as the corpus grows (0.91 →
     0.78 mean recall@10 from 500 to 2000 near-uniform vectors at
     rerank=16), and on hard embeddings the exact re-rank width is the
@@ -944,34 +966,9 @@ def pq_knn(
     ignored when given.
     """
     if index is not None:
-        if index.kind != "ivfpq":
-            raise ValueError(
-                f"pq_knn serves the codebook half of an 'ivfpq' index, "
-                f"got kind={index.kind!r}"
-            )
-        if getattr(index, "by_residual", False):
-            raise ValueError(
-                "pq_knn cannot serve a by_residual index: residual "
-                "codebooks quantize (vn - anchor[cell]) and are "
-                "meaningless without the coarse cell context — use "
-                "ivfpq_knn(index=...)"
-            )
-        _check_index_dim(corpus, vec_col, index.dim)
-        d_sub, books = index.d_sub, index.books
+        _check_index(index, corpus, vec_col, "pq_knn", rotation=rotation)
+        d_sub, books, rot = index.d_sub, index.books, getattr(index, "rot", None)
         n_sub, n_cells = index.n_sub, index.n_cells
-        # rotation is INDEX state, exactly like by_residual: explicit
-        # conflict with the recorded mode fails loudly; None inherits,
-        # and "auto" accepts whatever the build DECIDED (the recorded
-        # mode IS the auto result — round-13)
-        idx_rotation = getattr(index, "rotation", None)
-        if rotation not in (None, "auto") and rotation != idx_rotation:
-            raise ValueError(
-                f"rotation={rotation!r} conflicts with the index's "
-                f"recorded mode (rotation={idx_rotation!r}) — the "
-                "rotation is index geometry; drop the argument or "
-                "load the matching index"
-            )
-        rot = getattr(index, "rot", None)
     else:
         d_sub, books, rot, _ = _pq_train(
             corpus, id_col, vec_col, n_sub, n_cells, train_rounds,
@@ -980,41 +977,21 @@ def pq_knn(
     # resolved AFTER _pq_train so parameter validation (dim/n_sub
     # divisibility) fires before any corpus job
     rerank = _auto_rerank(corpus, rerank)
-    # Bind the normalized vector ONCE per side in its own projection —
-    # the n_sub code/dtab columns then reference the bound column, so
-    # the O(dim) norm fold appears once in the plan instead of n_sub
-    # times (CollapseProject declines to inline a multiply-referenced
-    # non-cheap alias; the kmeans_assign discipline).
     vn = F.col("_vn")
-    codes = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        _normalized(vec_col).alias("_vn"),
-    )
-    qtabs = queries.select(
-        F.col(id_col).alias("query_id"),
-        _normalized(vec_col).alias("_vn"),
-    )
-    if rot is not None:
-        # OPQ: re-bind _vn to the rotated vector in its own projection
-        # (the residual-rebind discipline) so the O(dim²) rotation
-        # runs once per row, not once per code/dtab column
-        rot_lit = _matrix_lit(rot)
-        codes = codes.select(
-            "neighbor_id",
-            _rotate_col(vn, rot_lit, d_sub * n_sub).alias("_vn"),
-        )
-        qtabs = qtabs.select(
-            "query_id",
-            _rotate_col(vn, rot_lit, d_sub * n_sub).alias("_vn"),
-        )
-    codes = codes.select(
+    codes = _pq_space(
+        corpus.select(F.col(id_col).alias("neighbor_id"), vec_col),
+        ["neighbor_id"], vec_col, rot=rot,
+    ).select(
         "neighbor_id",
         *[
             _pq_code_col(vn, books, s, d_sub, n_cells).alias(f"code_{s}")
             for s in range(n_sub)
         ],
     )
-    qtabs = qtabs.select(
+    qtabs = _pq_space(
+        queries.select(F.col(id_col).alias("query_id"), vec_col),
+        ["query_id"], vec_col, rot=rot,
+    ).select(
         "query_id",
         *[
             _pq_dtab_col(vn, books, s, d_sub, n_cells).alias(f"dtab_{s}")
@@ -1066,7 +1043,7 @@ def _pq_train(
     rotated fit with unrotated serving is geometry corruption, which
     the persisted-index pairing check rejects.
 
-    ``rotation="auto"`` (round-13) DECIDES per corpus class by the
+    ``rotation="auto"`` DECIDES per corpus class by the
     measured rule (SCALE.md r11/r12 tables: isotropic → raw, OPQ is
     pure overhead; anisotropic → opq, +0.20/+0.49/+0.64 recall at
     tight rerank): the (residual-adjusted) sample's contiguous-block
@@ -1083,9 +1060,9 @@ def _pq_train(
         raise ValueError(
             f"rotation must be None, 'opq' or 'auto', got {rotation!r}"
         )
-    # Pure-Python argument validation BEFORE any Spark job (round-13
-    # advisor item): an explicitly-passed bad dim must fail cheap, not
-    # after a max(train_sample, n_cells)-row collect.  The inferred-dim
+    # Pure-Python argument validation BEFORE any Spark job: an
+    # explicitly-passed bad dim must fail cheap, not after a
+    # max(train_sample, n_cells)-row collect.  The inferred-dim
     # path re-checks below once the sample reveals the width.
     if dim is not None and dim % n_sub != 0:
         raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
@@ -1096,10 +1073,9 @@ def _pq_train(
         .collect()
     )
     if dim is None:
-        # Round-13 (guide §1.2 step 1): the dimension used to be its
-        # own first() job; the training-sample collect above already
-        # holds the lowest-id vector, so infer it there — one fewer
-        # action per PQ fit (paid 1-2x by every ANN lifecycle row).
+        # The training-sample collect above already holds the lowest-id
+        # vector, so infer the dimension there rather than in a first()
+        # job of its own — one fewer action per PQ fit.
         if not seed_rows or seed_rows[0]["v"] is None:
             raise ValueError(
                 "empty corpus or NULL embedding in first row: nothing "
@@ -1183,7 +1159,6 @@ def _ivfpq_codes(
     n_sub: int,
     n_cells: int,
     d_sub: int,
-    assign: str,
     by_residual: bool = False,
     rot: list | None = None,
 ) -> DataFrame:
@@ -1193,63 +1168,77 @@ def _ivfpq_codes(
     ``operators/ann_index.py::build_ann_codes``'s persisted path, so
     codes served from the artifact are byte-identical to codes
     computed in-plan (the encode is deterministic: ties break to the
-    lowest PQ cell, coarse ties to the higher coarse cell — both
-    pinned by the standalone twins).  Map-only: one coarse assignment
-    + ``n_sub`` argmin expressions per row, no shuffle.
+    lowest PQ cell, coarse ties to the higher coarse cell).  Map-only:
+    one coarse assignment (:func:`_assign_cells_arrow`, the vector
+    carried through the kernel) + ``n_sub`` argmin expressions per
+    row, no shuffle.
 
-    ``by_residual=True`` quantizes ``vn - anchor[cell]``
-    (:func:`_residual_col`) instead of ``vn`` — the codebooks must
-    have been trained in residual space (:func:`_pq_train`
-    ``coarse=``); mixing modes is geometry corruption, which the
-    persisted-index pairing check rejects.  ``rot=`` (an OPQ rotation
-    matrix) re-binds ``_vn`` to the rotated vector AFTER the residual
-    step — the codebooks must have been trained on rotated samples
-    (``rotation="opq"``), and the same pairing check guards the
-    mix.  Coarse assignment stays in the ORIGINAL space: an
-    orthogonal rotation preserves every dot product, so rotating the
-    centroids too would change nothing but the plan size."""
-    if assign == "arrow":
-        # bound-normalized-vector discipline (see pq_knn): the norm
-        # fold appears once per side, the n_sub columns read the alias
-        vna = F.col("_vn")
-        base = _assign_cells_arrow(
-            corpus, id_col, vec_col, coarse, 1, keep_vec=True
-        ).select(
-            F.col("id").alias("neighbor_id"),
-            "cell",
-            _normalized("v").alias("_vn"),
-        )
-    else:
-        base = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            _nearest_cells(vec_col, coarse, 1)[0].alias("cell"),
-            _normalized(vec_col).alias("_vn"),
-        )
-        vna = F.col("_vn")
-    if by_residual:
-        # re-bind _vn to the residual in its own projection so the
-        # O(dim) subtraction runs once per row, not once per code col
-        anchors = F.lit(_residual_anchor(coarse))
-        base = base.select(
-            "neighbor_id",
-            "cell",
-            _residual_col(vna, anchors, F.col("cell")).alias("_vn"),
-        )
-    if rot is not None:
-        # OPQ rebind, same once-per-row discipline, after the residual
-        base = base.select(
-            "neighbor_id",
-            "cell",
-            _rotate_col(vna, _matrix_lit(rot), d_sub * n_sub).alias("_vn"),
-        )
-    return base.select(
+    ``by_residual=True`` quantizes ``vn - anchor[cell]`` and ``rot=``
+    (an OPQ rotation matrix) the rotated vector (:func:`_pq_space`) —
+    the codebooks must have been trained in that same space
+    (:func:`_pq_train` ``coarse=``/``rotation="opq"``); mixing modes is
+    geometry corruption, which the persisted-index pairing check
+    rejects."""
+    vn = F.col("_vn")
+    base = _assign_cells_arrow(
+        corpus, id_col, vec_col, coarse, 1, keep_vec=True
+    ).select(F.col("id").alias("neighbor_id"), "cell", "v")
+    return _pq_space(
+        base, ["neighbor_id", "cell"], "v",
+        coarse=coarse if by_residual else None, rot=rot,
+    ).select(
         "neighbor_id",
         "cell",
         *[
-            _pq_code_col(vna, books, s, d_sub, n_cells).alias(f"code_{s}")
+            _pq_code_col(vn, books, s, d_sub, n_cells).alias(f"code_{s}")
             for s in range(n_sub)
         ],
     )
+
+
+def _probe_tables(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    coarse: list,
+    nprobe: int,
+    books: list,
+    by_residual: bool,
+    rot: list | None,
+) -> DataFrame:
+    """The IVFPQ probe side — ``(query_id, cell, dtab_0..)``, one row
+    per (query, probed cell): each query's ``nprobe`` nearest coarse
+    cells (:func:`_assign_cells_arrow`) with its ADC distance tables.
+
+    Raw codes rank against a per-QUERY table, so the tables (O(n_sub ·
+    n_cells · d_sub) per row) are computed on the one-row-per-query
+    frame and only then exploded over the probed cells — the Generate
+    replicates computed values instead of re-evaluating the tables
+    ``nprobe`` times.  Residual codes rank against ``qn -
+    anchor[cell]``, so their tables are per-(query, probed cell):
+    explode first, then project into PQ space.  Either way this is the
+    tiny broadcast side; the corpus-side scan shape is unchanged."""
+    n_sub, n_cells, d_sub = len(books), len(books[0]), len(books[0][0])
+    vn = F.col("_vn")
+    probes = _assign_cells_arrow(
+        queries, id_col, vec_col, coarse, nprobe, keep_vec=True, explode=False
+    ).select(F.col("id").alias("query_id"), "cells", "v")
+    if by_residual:
+        probes = probes.select("query_id", F.explode("cells").alias("cell"), "v")
+    keep = ["query_id", "cell" if by_residual else "cells"]
+    dtabs = [f"dtab_{s}" for s in range(n_sub)]
+    tables = _pq_space(
+        probes, keep, "v", coarse=coarse if by_residual else None, rot=rot
+    ).select(
+        *keep,
+        *[
+            _pq_dtab_col(vn, books, s, d_sub, n_cells).alias(dtabs[s])
+            for s in range(n_sub)
+        ],
+    )
+    if by_residual:
+        return tables
+    return tables.select("query_id", F.explode("cells").alias("cell"), *dtabs)
 
 
 def _adc_shortlist(cand: DataFrame, width: int) -> DataFrame:
@@ -1290,15 +1279,11 @@ def _fetch_and_rerank(
         ),
         ["query_id"],
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        fetched.withColumn("cosine", cosine_similarity("qv", "cv"))
-        .select("query_id", "neighbor_id", "cosine")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
+    return _top_k(
+        fetched.withColumn("cosine", cosine_similarity("qv", "cv")).select(
+            "query_id", "neighbor_id", "cosine"
+        ),
+        k,
     )
 
 
@@ -1317,7 +1302,6 @@ def ivfpq_knn(
     train_rounds: int = 8,
     train_sample: int = 512,
     dim: int | None = None,
-    assign: str = "arrow",
     by_residual: bool | None = None,
     rotation: str | None = None,
     index=None,
@@ -1355,25 +1339,18 @@ def ivfpq_knn(
     ``n_coarse=None`` auto-sizes to ``⌈√N⌉`` capped at 4096 (the
     ``ivf_knn`` rule; see :func:`_auto_cells`) and ``rerank=None``
     (default) auto-sizes the re-rank width to
-    ``max(16, min(256, ⌈√N⌉))`` (:func:`_auto_rerank` — the pq_knn
+    ``max(16, min(1024, ⌈√N⌉))`` (:func:`_auto_rerank` — the pq_knn
     recall-leak reasoning: a fixed width decays as the corpus grows).
     ``nprobe=None`` (default) sizes the probe width so the expected
     candidate pool covers 4× the exact-rerank shortlist
     (:func:`_auto_nprobe`) — at fixture corpora that probes most
     cells (small-N degrades gracefully toward exact search), at
     deployment sizing it floors at 4 probes; all three knobs resolve
-    from ONE corpus count shared across them.
-    ``assign="arrow"`` (default — the deployed form) routes the COARSE
-    assignment through the batch-matmul kernel
+    from ONE corpus count shared across them.  Coarse assignment runs
+    through the batch-matmul kernel on both sides
     (:func:`_assign_cells_arrow` with the vector carried through, so
     the PQ code/table expressions compute downstream of the kernel
-    with no id-join back) — the large-``n_coarse`` form; the measured
-    10× soak's ``ann_ivfpq`` wall is dominated by the expression
-    form's O(n_coarse·dim) per-row term (expr 81.65 s vs arrow 9.55 s
-    at the 10× point with ``n_coarse ∝ corpus``), which the kernel
-    replaces with one matmul per Arrow batch.  ``assign="expr"`` stays
-    available for small fixed cell counts (the ``ivf_knn`` trade-off
-    note).
+    with no id-join back) — see ``ivf_knn``.
 
     ``index=`` (an :class:`fortymhz_spark.operators.ann_index.AnnIndex`)
     serves from a PERSISTED fit instead of training in-process: the
@@ -1427,12 +1404,6 @@ def ivfpq_knn(
     search's N).  Queries are never filtered — they are the probe
     side, not the served population.
     """
-    if assign not in ("expr", "arrow"):
-        raise ValueError(f"assign must be 'expr' or 'arrow', got {assign!r}")
-    if index is not None and index.kind != "ivfpq":
-        raise ValueError(
-            f"ivfpq_knn needs an 'ivfpq' index, got {index.kind!r}"
-        )
     if codes is not None and index is None:
         raise ValueError(
             "codes= carries no index geometry — pass the index it was "
@@ -1443,7 +1414,16 @@ def ivfpq_knn(
         # encode (in-plan path), auto-sizing, and the re-rank fetch all
         # see only matching rows; the codes path filters below
         corpus = corpus.filter(corpus_filter)
-    # Persisted serving knobs (round-12): an index loaded through
+    if index is not None:
+        by_residual = _check_index(
+            index, corpus, vec_col, "ivfpq_knn",
+            by_residual=by_residual, rotation=rotation,
+        )
+        coarse, books, rot = index.coarse, index.books, getattr(index, "rot", None)
+        n_coarse, n_sub, n_cells, d_sub = (
+            index.n_coarse, index.n_sub, index.n_cells, index.d_sub,
+        )
+    # Persisted serving knobs: an index loaded through
     # load_ann_serving(tuning_dir=...) carries the MEASURED operating
     # point tune_ann_serving recorded for this index version —
     # default omitted knobs to it before the closed-form formulas
@@ -1467,40 +1447,7 @@ def ivfpq_knn(
             or nprobe is None)
         else None
     )
-    if index is not None:
-        _check_index_dim(corpus, vec_col, index.dim)
-        coarse, books = index.coarse, index.books
-        n_coarse, n_sub, n_cells, d_sub = (
-            index.n_coarse, index.n_sub, index.n_cells, index.d_sub,
-        )
-        # the encode mode is INDEX state, not a query-time knob — the
-        # codebooks were trained in one space and must be ADC'd in it.
-        # An EXPLICIT by_residual that contradicts the index's
-        # recorded mode is the same mode-mixing the pairing check
-        # rejects everywhere else: fail loudly, never silently serve
-        # the other space (advisor round-11).
-        idx_mode = bool(getattr(index, "by_residual", False))
-        if by_residual is not None and bool(by_residual) != idx_mode:
-            raise ValueError(
-                f"by_residual={by_residual!r} conflicts with the "
-                f"index's recorded mode (by_residual={idx_mode}) — "
-                "the encode space is index geometry; drop the "
-                "argument or load the matching index"
-            )
-        by_residual = idx_mode
-        # "auto" accepts whatever the build DECIDED — the recorded
-        # mode IS the auto result (round-13); other explicit modes
-        # must match the geometry exactly
-        idx_rotation = getattr(index, "rotation", None)
-        if rotation not in (None, "auto") and rotation != idx_rotation:
-            raise ValueError(
-                f"rotation={rotation!r} conflicts with the index's "
-                f"recorded mode (rotation={idx_rotation!r}) — the "
-                "rotation is index geometry; drop the argument or "
-                "load the matching index"
-            )
-        rot = getattr(index, "rot", None)
-    else:
+    if index is None:
         by_residual = bool(by_residual)
         n_coarse = _auto_cells(corpus, n_coarse, n=n_rows)
         coarse = _centroids(corpus, id_col, vec_col, n_coarse)
@@ -1534,8 +1481,7 @@ def ivfpq_knn(
             # (everything beyond the codes schema IS the recorded
             # meta_cols set — build/extend admit nothing else) rejects
             # exactly those, and the semi-join fallback evaluates the
-            # predicate where its names mean what the caller meant
-            # (advisor round-11).
+            # predicate where its names mean what the caller meant.
             meta_only = [c for c in codes.columns if c not in want]
             pushable = False
             if meta_only:
@@ -1558,8 +1504,7 @@ def ivfpq_knn(
             else:
                 # the predicate needs corpus-only columns: evaluate it
                 # there and semi-join the matching ids into the scan.
-                # BROAD-FILTER GUARD (round-13, SCALE.md honest-list
-                # #5): the semi-join shuffles codes × filtered-ids —
+                # Broad-filter guard (SCALE.md): the semi-join shuffles codes × filtered-ids —
                 # right for a selective predicate, ∝ table for a broad
                 # one, where the metadata-at-rest pushdown path
                 # (build_ann_codes(meta_cols=...)) costs zero joins.
@@ -1599,129 +1544,11 @@ def ivfpq_knn(
     else:
         code_tbl = _ivfpq_codes(
             corpus, id_col, vec_col, coarse, books, n_sub, n_cells,
-            d_sub, assign, by_residual=by_residual, rot=rot,
+            d_sub, by_residual=by_residual, rot=rot,
         )
-    if by_residual:
-        # Residual ADC: the distance target is (qn - anchor[cell]), so
-        # the tables are per-(query, probed-cell) — explode FIRST, bind
-        # the residual in its own projection (one O(dim) subtraction
-        # per probe row), THEN the dtab columns.  Probe-side only: the
-        # query frame is the tiny broadcast side.
-        anchors = F.lit(_residual_anchor(coarse))
-        if assign == "arrow":
-            q0 = _assign_cells_arrow(
-                queries, id_col, vec_col, coarse, nprobe,
-                keep_vec=True, explode=False,
-            ).select(
-                F.col("id").alias("query_id"),
-                "cells",
-                _normalized("v").alias("_vn"),
-            )
-        else:
-            q0 = queries.select(
-                F.col(id_col).alias("query_id"),
-                _nearest_cells(vec_col, coarse, nprobe).alias("cells"),
-                _normalized(vec_col).alias("_vn"),
-            )
-        vnr = F.col("_vn")
-        qtabs = (
-            q0.select(
-                "query_id",
-                F.explode("cells").alias("cell"),
-                "_vn",
-            )
-            .select(
-                "query_id",
-                "cell",
-                _residual_col(vnr, anchors, F.col("cell")).alias("_vn"),
-            )
-        )
-        if rot is not None:
-            # OPQ rebind after the residual, once per probe row
-            qtabs = qtabs.select(
-                "query_id",
-                "cell",
-                _rotate_col(vnr, _matrix_lit(rot), d_sub * n_sub).alias("_vn"),
-            )
-        qtabs = qtabs.select(
-            "query_id",
-            "cell",
-            *[
-                _pq_dtab_col(vnr, books, s, d_sub, n_cells).alias(
-                    f"dtab_{s}"
-                )
-                for s in range(n_sub)
-            ],
-        )
-    elif assign == "arrow":
-        # Distance tables are O(n_sub·n_cells·d_sub) per row — compute
-        # them on the one-row-per-query frame (explode=False), THEN
-        # explode the probe cells, so the Generate replicates computed
-        # values instead of re-evaluating the dtabs nprobe times.
-        vna = F.col("_vn")
-        qtabs = _assign_cells_arrow(
-            queries, id_col, vec_col, coarse, nprobe,
-            keep_vec=True, explode=False,
-        ).select(
-            F.col("id").alias("query_id"),
-            "cells",
-            _normalized("v").alias("_vn"),
-        )
-        if rot is not None:
-            qtabs = qtabs.select(
-                "query_id",
-                "cells",
-                _rotate_col(vna, _matrix_lit(rot), d_sub * n_sub).alias("_vn"),
-            )
-        qtabs = (
-            qtabs.select(
-                "query_id",
-                "cells",
-                *[
-                    _pq_dtab_col(vna, books, s, d_sub, n_cells).alias(
-                        f"dtab_{s}"
-                    )
-                    for s in range(n_sub)
-                ],
-            )
-            .select(
-                "query_id",
-                F.explode("cells").alias("cell"),
-                *[f"dtab_{s}" for s in range(n_sub)],
-            )
-        )
-    else:
-        # Same explode-last discipline as the arrow route: dtabs are
-        # evaluated once per query row, the Generate only replicates.
-        vn = F.col("_vn")
-        qtabs = queries.select(
-            F.col(id_col).alias("query_id"),
-            _nearest_cells(vec_col, coarse, nprobe).alias("cells"),
-            _normalized(vec_col).alias("_vn"),
-        )
-        if rot is not None:
-            qtabs = qtabs.select(
-                "query_id",
-                "cells",
-                _rotate_col(vn, _matrix_lit(rot), d_sub * n_sub).alias("_vn"),
-            )
-        qtabs = (
-            qtabs.select(
-                "query_id",
-                "cells",
-                *[
-                    _pq_dtab_col(vn, books, s, d_sub, n_cells).alias(
-                        f"dtab_{s}"
-                    )
-                    for s in range(n_sub)
-                ],
-            )
-            .select(
-                "query_id",
-                F.explode("cells").alias("cell"),
-                *[f"dtab_{s}" for s in range(n_sub)],
-            )
-        )
+    qtabs = _probe_tables(
+        queries, id_col, vec_col, coarse, nprobe, books, by_residual, rot
+    )
     cand = (
         code_tbl.join(qtabs, ["cell"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -1737,56 +1564,23 @@ def ivfpq_knn(
 
 
 def _nearest_centroid(vec_col: str, centroids: list):
-    """(dist, cluster) struct of the euclidean-nearest centroid (ties
-    → lowest index).
+    """(dist, cluster) struct of the euclidean-nearest centroid to
+    column ``vec_col`` (ties → lowest index).
 
-    Constant-size construction (the ``_pq_code_col`` /
-    ``_nearest_cells`` lesson): the centroid matrix is ONE nested
-    literal and the per-centroid distance is a transform-over-sequence
-    lambda, so the expression tree — rebuilt every Lloyd round by
-    ``kmeans_assign`` — sizes O(1) in k instead of O(k·dim) py4j
-    literal calls.  Distances and tie-breaking are
-    arithmetic-identical to the per-centroid literal form.
-
-    Round-13: plain-name + finite-matrix calls (every in-repo site)
-    build the WHOLE expression with one ``F.expr`` parse — the
-    Column-API lambda construction cost ~0.5 s per call, rebuilt
-    every Lloyd round; the template is the same tree (fold order,
-    casts, field names, ``array_sort[0]`` tie-break), so plans and
-    results are unchanged."""
-    mat = _matrix_sql(centroids)
-    if isinstance(vec_col, str) and mat is not None:
-        k = len(centroids)
-        return F.expr(
-            f"element_at(transform(array(`{vec_col}`), v0 -> "
-            f"array_sort(transform(sequence(0, {k - 1}), "
-            f"i -> named_struct('dist', aggregate(zip_with(v0, "
-            f"element_at({mat}, cast(i + 1 as int)), "
-            "(a, b) -> (cast(a as double) - b) * (cast(a as double) - b)), "
-            "0.0D, (acc, x) -> acc + x), 'cluster', i)))[0]), 1)"
-        )
-    cents_lit = _matrix_lit(centroids)
-
-    def over(v):
-        scored = F.transform(
-            F.sequence(F.lit(0), F.lit(len(centroids) - 1)),
-            lambda i: F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        v,
-                        F.element_at(cents_lit, (i + F.lit(1)).cast("int")),
-                        lambda a, b: (a.cast("double") - b)
-                        * (a.cast("double") - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("dist"),
-                i.alias("cluster"),
-            ),
-        )
-        return F.array_sort(scored)[0]
-
-    return F.element_at(F.transform(F.array(F.col(vec_col)), over), 1)
+    The ``_nearest_cells`` construction: one ``F.expr`` parse of a
+    transform-over-sequence lambda with the centroid matrix as a
+    single nested literal, so the expression — rebuilt every Lloyd
+    round by ``kmeans_assign`` — costs one py4j call and sizes O(1)
+    in k instead of O(k·dim) literal nodes."""
+    k = len(centroids)
+    return F.expr(
+        f"element_at(transform(array(`{vec_col}`), v0 -> "
+        f"array_sort(transform(sequence(0, {k - 1}), "
+        f"i -> named_struct('dist', aggregate(zip_with(v0, "
+        f"element_at({_matrix_sql(centroids)}, cast(i + 1 as int)), "
+        "(a, b) -> (cast(a as double) - b) * (cast(a as double) - b)), "
+        "0.0D, (acc, x) -> acc + x), 'cluster', i)))[0]), 1)"
+    )
 
 
 _KMEANSPAR_SEED = 0x464D485A  # fixed hash seed — determinism, not secrecy
@@ -2137,12 +1931,7 @@ def brute_force_knn_arrow(
             yield out[out["cosine"] > -np.inf]
 
     local = corpus.select(id_col, vec_col).mapInPandas(score_batches, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        local.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _top_k(local, k)
 
 
 # ---------------------------------------------------------------------------

@@ -9,6 +9,7 @@ notebook's per-partition pandas materialization,
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 
@@ -127,24 +128,32 @@ def run_to_memory(
     the driver.
     """
     name = name or f"mem_{uuid.uuid4().hex[:12]}"
+    own_checkpoint = checkpoint_dir is None
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="fmhz_ckpt_")
-    query = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(timeout_seconds)
-    if query.isActive:
-        # A silent partial table here turns into flaky downstream
-        # assertions that look like operator bugs — fail loudly.
-        query.stop()
-        raise TimeoutError(
-            f"stream {name!r} did not finish within {timeout_seconds}s; "
-            "stopped with only partially-committed batches"
+    query = None
+    try:
+        query = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
         )
+        query.awaitTermination(timeout_seconds)
+        if query.isActive:
+            # A silent partial table here turns into flaky downstream
+            # assertions that look like operator bugs — fail loudly.
+            raise TimeoutError(
+                f"stream {name!r} did not finish within {timeout_seconds}s; "
+                "stopped with only partially-committed batches"
+            )
+    finally:
+        if query is not None:
+            query.stop()  # a timed-out or interrupted run; no-op once done
+        if own_checkpoint:
+            # the memory table outlives the query; its checkpoint does not
+            shutil.rmtree(checkpoint_dir, ignore_errors=True)
     return spark.table(name)
 
 

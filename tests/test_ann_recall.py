@@ -8,6 +8,8 @@ functions have needed) shows up as a failing number, not silence.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from fortymhz_spark.operators.similarity import brute_force_knn, ivf_knn, lsh_knn
@@ -325,18 +327,33 @@ def test_semantic_near_dup_arrow_path_matches_expr_on_blobs(spark):
     assert arrow1 == expr  # same exact-verified pairs at full recall
 
 
-def test_arrow_and_expr_cell_assignment_agree_on_ties(spark):
-    """With a FIXED centroid list containing duplicates and a vector
-    equidistant from everything (all dots tie), the Arrow batch-matmul
-    assignment must pick the same cells as the expression path —
-    both break dot-product ties toward the HIGHER cell index
-    (_nearest_cells' reverse(array_sort) order)."""
+def _cells_by_both_paths(df, cents, probes):
     from pyspark.sql import functions as F
 
     from fortymhz_spark.operators.similarity import (
         _assign_cells_arrow,
         _nearest_cells,
     )
+
+    expr = df.select(
+        F.col("vec_id").alias("id"),
+        F.explode(_nearest_cells("embedding", cents, probes)).alias("cell"),
+    )
+    arrow = _assign_cells_arrow(df, "vec_id", "embedding", cents, probes)
+    return sorted(map(tuple, expr.collect())), sorted(map(tuple, arrow.collect()))
+
+
+def test_arrow_and_expr_cell_assignment_agree_on_ties(spark):
+    """The Arrow batch-matmul cell assignment (the only one ivf_knn /
+    ivfpq_knn / the codes encode use) must pick the same cells as the
+    pure-expression reference ``_nearest_cells`` — both break
+    dot-product ties toward the HIGHER cell index (reverse(array_sort)
+    order).  Two inputs: a FIXED centroid list containing duplicates
+    with vectors that tie (one equidistant from everything, every dot
+    0), and the real sf0.01 embeddings against their 16 lowest-id
+    centroids (the ivf_knn default sizing), at 1 probe (the corpus
+    side) and 4 (the query side)."""
+    from fortymhz_spark.operators.similarity import _centroids
 
     cents = [[1.0, 0.0], [0.0, 1.0], [1.0, 0.0], [0.5, 0.5]]  # 0 == 2
     df = spark.createDataFrame(
@@ -348,18 +365,40 @@ def test_arrow_and_expr_cell_assignment_agree_on_ties(spark):
         ],
         "vec_id long, embedding array<float>",
     )
-    expr = df.select(
-        F.col("vec_id").alias("id"),
-        F.explode(_nearest_cells("embedding", cents, 2)).alias("cell"),
-    )
-    got_expr = sorted(map(tuple, expr.collect()))
-    got_arrow = sorted(
-        map(
-            tuple,
-            _assign_cells_arrow(df, "vec_id", "embedding", cents, 2).collect(),
-        )
-    )
+    got_expr, got_arrow = _cells_by_both_paths(df, cents, 2)
     assert got_expr == got_arrow
+
+    emb = load_table(
+        spark, os.path.join(os.path.dirname(SF), "sf0.01"), "embeddings"
+    )
+    real_cents = _centroids(emb, "vec_id", "embedding", 16)
+    n = emb.count()
+    for probes in (1, 4):
+        got_expr, got_arrow = _cells_by_both_paths(emb, real_cents, probes)
+        assert len(got_expr) == n * probes
+        assert got_expr == got_arrow, probes
+
+
+def test_matrix_lit_non_finite_matches_f_lit(spark):
+    """``_matrix_lit`` renders NaN and ±Inf as string casts (they have
+    no SQL literal syntax); the values must be the ones ``F.lit``
+    builds, finite neighbours included."""
+    from pyspark.sql import functions as F
+
+    from fortymhz_spark.operators.similarity import _matrix_lit
+
+    mat = [[float("nan"), float("inf"), -0.5], [float("-inf"), 0.1, 1e300]]
+    got = spark.range(1).select(
+        _matrix_lit(mat).alias("m"), F.lit(mat).alias("ref")
+    )
+    # the string casts make the element type nullable; the values match
+    assert got.schema["m"].dataType.elementType.elementType == (
+        got.schema["ref"].dataType.elementType.elementType
+    )
+    row = got.first()
+    assert [[repr(x) for x in r] for r in row["m"]] == [
+        [repr(x) for x in r] for r in row["ref"]
+    ]
 
 
 def test_kmeans_arrow_assignment_matches_expr_on_blobs(spark):
@@ -508,45 +547,6 @@ def test_ivf_auto_cells_sqrt_sizing(spark):
         assert len(ns) == 3, (q, ns)
 
 
-def test_ivf_arrow_assignment_matches_expression(spark, truth):
-    """assign='arrow' (batch-matmul cell assignment) must return the
-    SAME neighbors as the expression form on the real fixture — the
-    dots are well-separated doubles, so the documented last-ulp BLAS
-    caveat cannot reorder them here — and the mode is validated."""
-    emb, queries, _ = truth
-    expr_rows = ivf_knn(
-        emb, queries, k=K, n_cells=16, nprobe=4, assign="expr"
-    ).collect()
-    arrow_rows = ivf_knn(
-        emb, queries, k=K, n_cells=16, nprobe=4, assign="arrow"
-    ).collect()
-    key = lambda r: (r["query_id"], r["neighbor_id"])
-    assert sorted(map(key, arrow_rows)) == sorted(map(key, expr_rows))
-
-    with pytest.raises(ValueError, match="assign"):
-        ivf_knn(emb, queries, k=K, assign="nope")
-
-
-def test_ivfpq_arrow_assignment_matches_expression(spark, truth):
-    """The IVF+PQ composition with arrow coarse assignment must match
-    the expression form's output exactly: identical coarse cells
-    (tie-compatible kernel) feed identical PQ codes/tables, so the
-    whole candidate set and re-rank agree."""
-    from fortymhz_spark.operators.similarity import ivfpq_knn
-
-    emb, queries, _ = truth
-    kwargs = dict(
-        k=K, n_coarse=16, nprobe=4, n_sub=8, n_cells=16, rerank=8
-    )
-    expr_rows = ivfpq_knn(emb, queries, assign="expr", **kwargs).collect()
-    arrow_rows = ivfpq_knn(emb, queries, assign="arrow", **kwargs).collect()
-    key = lambda r: (r["query_id"], r["neighbor_id"])
-    assert sorted(map(key, arrow_rows)) == sorted(map(key, expr_rows))
-
-    with pytest.raises(ValueError, match="assign"):
-        ivfpq_knn(emb, queries, assign="bogus", **kwargs)
-
-
 # ---------------------------------------------------------------------------
 # persisted index lifecycle (operators/ann_index.py): train once,
 # serve many — the snapshot-table artifact must reproduce the
@@ -642,7 +642,7 @@ def test_ann_codes_roundtrip_serves_byte_identical(spark, truth, tmp_path):
     # the artifact rows ARE the in-plan encode rows
     inplan_codes = _ivfpq_codes(
         emb, "vec_id", "embedding", idx.coarse, idx.books,
-        idx.n_sub, idx.n_cells, idx.d_sub, "arrow",
+        idx.n_sub, idx.n_cells, idx.d_sub,
     ).withColumnRenamed("neighbor_id", "id")
     key = lambda r: tuple(r)
     assert sorted(map(key, codes.collect())) == sorted(
@@ -1130,23 +1130,6 @@ def test_ivfpq_by_residual_recall_floor(spark, truth):
     assert r >= 0.5, f"residual IVFPQ recall@{K} = {r:.2f}"
 
 
-def test_ivfpq_by_residual_expr_matches_arrow(spark, truth):
-    """The residual query path exists in both physical forms — the
-    per-(query, cell) distance tables must rank identically whether
-    the coarse assignment ran as an expression or an Arrow matmul."""
-    from fortymhz_spark.operators.similarity import ivfpq_knn
-
-    emb, queries, _ = truth
-    kw = dict(
-        k=K, n_coarse=8, nprobe=4, n_sub=8, n_cells=16, rerank=8,
-        by_residual=True,
-    )
-    key = lambda r: tuple(r)
-    a = ivfpq_knn(emb, queries, assign="arrow", **kw).collect()
-    e = ivfpq_knn(emb, queries, assign="expr", **kw).collect()
-    assert sorted(map(key, a)) == sorted(map(key, e))
-
-
 def test_residual_index_roundtrip_codes_identity_and_lifecycle(
     spark, truth, tmp_path
 ):
@@ -1196,7 +1179,7 @@ def test_residual_index_roundtrip_codes_identity_and_lifecycle(
     codes = load_ann_codes(spark, codes_dir, idx, corpus_version=1)
     inplan = _ivfpq_codes(
         emb, "vec_id", "embedding", idx.coarse, idx.books,
-        idx.n_sub, idx.n_cells, idx.d_sub, "arrow", by_residual=True,
+        idx.n_sub, idx.n_cells, idx.d_sub, by_residual=True,
     ).withColumnRenamed("neighbor_id", "id")
     assert sorted(map(key, codes.collect())) == sorted(
         map(key, inplan.collect())
@@ -1204,7 +1187,7 @@ def test_residual_index_roundtrip_codes_identity_and_lifecycle(
     # ...and the codes DIFFER from a raw encode (the mode is real)
     raw = _ivfpq_codes(
         emb, "vec_id", "embedding", idx.coarse, idx.books,
-        idx.n_sub, idx.n_cells, idx.d_sub, "arrow", by_residual=False,
+        idx.n_sub, idx.n_cells, idx.d_sub, by_residual=False,
     ).withColumnRenamed("neighbor_id", "id")
     assert sorted(map(key, codes.collect())) != sorted(
         map(key, raw.collect())

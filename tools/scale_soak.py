@@ -302,31 +302,10 @@ def workloads(spark, docs, emb, scale_mult: int = 1, docs_path: str = ""):
             ).count(),
         ),
         (
-            # coarse cells grow with the corpus (constant expected
-            # |cell| — the IVF deployment rule), so candidate volume
-            # stays ∝ corpus x nprobe / n_coarse.
-            "ann_ivfpq",
-            lambda: sim.ivfpq_knn(
-                emb,
-                queries,
-                k=10,
-                n_coarse=16 * scale_mult,
-                nprobe=8,
-                n_sub=8,
-                n_cells=16,
-                rerank=16,
-                # the EXPRESSION-form comparison row, kept beside the
-                # arrow row below now that assign="arrow" is the
-                # operator default
-                assign="expr",
-            ).count(),
-        ),
-        (
-            # same composition with the batch-matmul coarse assignment
-            # (assign="arrow") — the deployment form once n_coarse
-            # outgrows the expression plan (the semantic_dedup rule);
-            # measured beside the expression row so the win is a
-            # number, not a claim.
+            # IVF + PQ composed; coarse cells grow with the corpus
+            # (constant expected |cell| — the IVF deployment rule), so
+            # candidate volume stays ∝ corpus x nprobe / n_coarse.
+            # Coarse assignment is the batch-matmul kernel.
             "ann_ivfpq_arrow",
             lambda: sim.ivfpq_knn(
                 emb,
@@ -337,7 +316,6 @@ def workloads(spark, docs, emb, scale_mult: int = 1, docs_path: str = ""):
                 n_sub=8,
                 n_cells=16,
                 rerank=16,
-                assign="arrow",
             ).count(),
         ),
         (
@@ -354,7 +332,6 @@ def workloads(spark, docs, emb, scale_mult: int = 1, docs_path: str = ""):
                 k=10,
                 nprobe=8,
                 rerank=16,
-                assign="arrow",
                 index=_served_index(spark, emb, 16 * scale_mult),
             ).count(),
         ),
@@ -374,7 +351,6 @@ def workloads(spark, docs, emb, scale_mult: int = 1, docs_path: str = ""):
                 k=10,
                 nprobe=8,
                 rerank=16,
-                assign="arrow",
                 index=_served_index(spark, emb, 16 * scale_mult),
                 codes=_served_codes(spark, emb, 16 * scale_mult),
             ).count(),
@@ -1055,7 +1031,6 @@ def pq_residual_soak(spark, mults: list[int], reps: int = 2) -> int:
                     n_sub=8,
                     n_cells=16,
                     rerank=16,
-                    assign="arrow",
                     by_residual=flag,
                 ).collect()
                 best = min(best, time.perf_counter() - t0)
@@ -1124,7 +1099,7 @@ def ann_filtered_soak(spark, mults: list[int], reps: int = 2) -> int:
                 t0 = time.perf_counter()
                 n = ivfpq_knn(
                     emb, queries, k=10, nprobe=8, rerank=16,
-                    assign="arrow", index=idx, codes=codes,
+                    index=idx, codes=codes,
                     corpus_filter=pred,
                 ).count()
                 best = min(best, time.perf_counter() - t0)
@@ -1176,7 +1151,7 @@ def pq_opq_soak(spark, mults: list[int], reps: int = 2) -> int:
                 t0 = time.perf_counter()
                 got = ivfpq_knn(
                     emb, queries, k=K, n_coarse=16 * mult, nprobe=None,
-                    n_sub=8, n_cells=16, rerank=None, assign="arrow",
+                    n_sub=8, n_cells=16, rerank=None,
                     rotation=rotation,
                 ).collect()
                 best = min(best, time.perf_counter() - t0)
@@ -1257,7 +1232,7 @@ def pq_opq_aniso_soak(spark, mults: list[int], reps: int = 2) -> int:
                 t0 = time.perf_counter()
                 got = ivfpq_knn(
                     emb, queries, k=K, n_coarse=16 * mult, nprobe=None,
-                    n_sub=8, n_cells=16, rerank=16, assign="arrow",
+                    n_sub=8, n_cells=16, rerank=16,
                     rotation=rotation,
                 ).collect()
                 best = min(best, time.perf_counter() - t0)
@@ -1373,7 +1348,7 @@ def ann_tuned_soak(
             for _ in range(reps):
                 t1 = time.perf_counter()
                 got = ivfpq_knn(
-                    emb, queries, k=K, assign="arrow", index=midx,
+                    emb, queries, k=K, index=midx,
                     codes=mcodes, **kw,
                 ).collect()
                 best = min(best, time.perf_counter() - t1)
